@@ -1,115 +1,162 @@
-"""Session-scoped memoization with per-key locking.
+"""Per-session state: one owner for every session-scoped memo.
 
-The query modules keep module-level caches of expensive shared frames
-(calc staging cascade, builder criteria, LSH pair index, ANN
-constants...). ``session.warm_shared_caches`` populates them from
-CONCURRENT chains, and user code may race a warm-up thread into the
-same accessor. A bare ``if key not in cache: cache[key] = build()``
-is check-then-act: two threads can both miss and double-build — at
-best wasted cluster work, at worst a leaked eager localCheckpoint
-that nothing ever references.
+The reference materializes its staging, criteria and cascade tables
+once per run (TRUNCATE + INSERT...SELECT); the engine does the same
+with session-shared frames (calc staging cascade, builder criteria,
+LSH pair index, ANN constants, table-scan handles...).  All of that
+state lives in ONE ``SessionState`` per ``SparkSession``, created under
+a module lock on first use and stored on the session object itself —
+so it is freed with the session, and after ``spark.stop()`` the next
+session starts empty.  No table is keyed by the application id or
+by ``id()``.
 
-``locked_get`` makes the invariant structural instead of
-conventional: per-(cache, key) locks serialize builders for the SAME
-entry while leaving distinct entries (and distinct caches) fully
-concurrent, so the warm-up chains keep their parallelism.
+``session.warm_shared_caches`` fills the state from CONCURRENT
+chains, and user code may race a warm-up thread into the same
+accessor.  A bare ``if key not in cache: cache[key] = build()`` is
+check-then-act: two threads can both miss and double-build — at best
+wasted cluster work, at worst a leaked eager localCheckpoint that
+nothing ever references.  ``SessionState.memo`` makes the invariant
+structural: a lock-free hit, per-key locks that serialize builders for
+the SAME entry while distinct entries build concurrently (so the
+warm-up chains keep their parallelism), and a failed build is not
+cached.  ``session_memo`` is the accessor-side form: it memoises a
+``fn(spark, *args)`` under the key ``(fn, *args)``.
+
+The state also holds the temp-view registration record read by
+``sources.testdata.registered_once``, the CacheManager-backed frames
+``reattach`` restores, and the reentrant AQE-off depth counter.
 """
 
 from __future__ import annotations
 
+import functools
 import threading
 from collections.abc import Callable, Hashable
 from typing import TypeVar
 
 V = TypeVar("V")
 
-class SessionCache(dict):
-    """A plain dict whose per-key lock table rides as an instance
-    ATTRIBUTE, not an entry: the data plane stays pure, so iterating,
-    ``len()``-ing, clearing, or serializing the cache only ever sees
-    real (key, value) pairs.  Lock lifetime is still coupled to the
-    cache (the attribute dies with the instance) — the property the
-    earlier sentinel-key design bought, without its hidden entry.
 
-    All module-level query caches should be declared as
-    ``SessionCache()``; ``locked_get`` keeps a sentinel-key fallback
-    only so ad-hoc plain dicts (tests, scratch code) still work."""
+class SessionState:
+    """Everything the engine memoises for one SparkSession."""
 
-    __slots__ = ("_locks",)
+    __slots__ = ("lock", "_locks", "_values", "views", "tracked", "aqe")
 
     def __init__(self) -> None:
-        super().__init__()
+        #: guards the per-key lock table and the AQE flip counter;
+        #: never held across a build
+        self.lock = threading.Lock()
         self._locks: dict = {}
+        self._values: dict = {}
+        #: temp-view family -> sf_dir whose registration has COMPLETED
+        self.views: dict[str, str] = {}
+        #: session-shared frames kept alive through Spark's CacheManager
+        #: — only the ``.cache()``'d staging dims register here
+        #: (``session_cache`` builds checkpoints, which live as RDD
+        #: blocks outside CacheManager and survive ``clearCache()`` on
+        #: their own).  ``spark.catalog.clearCache()`` evicts the
+        #: CacheManager ENTRIES but the memo keeps handing out the same
+        #: DataFrame handles — every consumer then silently replans
+        #: against full lineage (the criteria/cascade/cert_info frames
+        #: recompute per query, and plan-shape contracts that rely on
+        #: the cached frame's reported partitioning break). Tests that
+        #: must clear the cache to see through InMemoryRelation
+        #: substitution call ``reattach`` right after, which
+        #: re-registers every tracked frame's cache entry.
+        self.tracked: list = []
+        #: reentrant AQE-off flip: [depth, original value] while any
+        #: ``_aqe_off`` window is open, else None. Per SESSION (conf is
+        #: per-session: two sessions sharing one app must not restore
+        #: each other's value). Guarded by ``lock``; the BUILD between
+        #: flip and restore runs outside it, so concurrent
+        #: session_cache builds still overlap. NOTE: the flip is
+        #: session-wide for its duration — unrelated queries PLANNED
+        #: inside the window lose AQE's runtime re-optimization; the
+        #: window is kept to the checkpoint construction only, and
+        #: warm-up chains that plan concurrently accept it (their
+        #: frames are checkpoint leaves whose consumers re-plan with
+        #: AQE on).
+        self.aqe: list | None = None
+
+    def key_lock(self, key: Hashable) -> threading.Lock:
+        """The one lock serializing work on ``key`` in this session."""
+        with self.lock:
+            return self._locks.setdefault(key, threading.Lock())
+
+    def memo(self, key: Hashable, build: Callable[[], V]) -> V:
+        """Memoize ``build()`` under ``key`` with double-checked per-key
+        locking: the fast path is a lock-free hit; on a miss, exactly
+        one thread runs the builder while others for the same key
+        block, and builders for different keys never contend.  A build
+        that raises leaves the slot empty, so the next call retries."""
+        try:
+            return self._values[key]
+        except KeyError:
+            pass
+        with self.key_lock(key):
+            if key not in self._values:
+                self._values[key] = build()
+            return self._values[key]
+
+    def peek(self, key: Hashable):
+        """The memoised value under ``key`` if one was built, else
+        None; never builds."""
+        return self._values.get(key)
 
 
-#: Fallback sentinel key under which a PLAIN cache dict carries its
-#: lock table (see ``SessionCache``); never collides with user keys.
-#: Plain dicts passed to ``locked_get`` gain this hidden entry — code
-#: that iterates such a dict must skip it, which is exactly why the
-#: module caches use ``SessionCache`` instead.
-_LOCK_TABLE_KEY = object()
-_LOCKS_GUARD = threading.Lock()
+_STATE_ATTR = "_apl_session_state"
+_STATE_GUARD = threading.Lock()
 
-#: Session-shared frames kept alive through Spark's CacheManager —
-#: only the ``.cache()``'d staging dims register here (``session_cache``
-#: builds checkpoints, which live as RDD blocks outside CacheManager
-#: and survive ``clearCache()`` on their own).
-#: ``spark.catalog.clearCache()`` evicts the CacheManager ENTRIES but
-#: the module-level SessionCaches keep handing out the same DataFrame
-#: handles — every consumer then silently replans against full
-#: lineage (the criteria/cascade/cert_info frames recompute per
-#: query, and plan-shape contracts that rely on the cached frame's
-#: reported partitioning break). Tests that must clear the cache to
-#: see through InMemoryRelation substitution call ``reattach`` right
-#: after, which re-registers every tracked frame's cache entry.
-_TRACKED: list = []
+
+def session_state(spark) -> SessionState:
+    """The session's state, created on first use (under one module
+    lock, so racing first touches agree on a single instance)."""
+    st = getattr(spark, _STATE_ATTR, None)
+    if st is None:
+        with _STATE_GUARD:
+            st = getattr(spark, _STATE_ATTR, None)
+            if st is None:
+                st = SessionState()
+                setattr(spark, _STATE_ATTR, st)
+    return st
+
+
+def session_memo(fn: Callable[..., V]) -> Callable[..., V]:
+    """Memoise ``fn(spark, *args)`` once per session under the key
+    ``(fn, *args)`` — the shape of every shared-frame accessor.
+    ``args`` must be hashable (sf_dir strings, table names)."""
+
+    @functools.wraps(fn)
+    def memoised(spark, *args):
+        return session_state(spark).memo(
+            (memoised, *args), lambda: fn(spark, *args)
+        )
+
+    return memoised
 
 
 def track_persisted(df):
     """Record a CacheManager-backed shared frame so ``reattach`` can
     restore its cache entry after a ``clearCache()``."""
-    _TRACKED.append(df)
+    session_state(df.sparkSession).tracked.append(df)
     return df
 
 
-def reattach() -> int:
-    """Re-persist every tracked shared frame whose CacheManager entry
-    was evicted (``clearCache()``/``unpersist``). Lazy: the columnar
-    batches rebuild on next use; what matters is that the ENTRY is
-    back so plans substitute the cached frame (with its partitioning)
-    again. Returns the number of frames re-registered."""
+def reattach(spark) -> int:
+    """Re-persist every tracked shared frame of ``spark`` whose
+    CacheManager entry was evicted (``clearCache()``/``unpersist``).
+    Lazy: the columnar batches rebuild on next use; what matters is
+    that the ENTRY is back so plans substitute the cached frame (with
+    its partitioning) again. Returns the number of frames
+    re-registered."""
     from pyspark.storagelevel import StorageLevel
 
     n = 0
-    for df in _TRACKED:
-        try:
-            if df.storageLevel == StorageLevel.NONE:
-                df.persist()
-                n += 1
-        except Exception:
-            pass  # frame from a stopped session: nothing to restore
+    for df in session_state(spark).tracked:
+        if df.storageLevel == StorageLevel.NONE:
+            df.persist()
+            n += 1
     return n
-
-
-def locked_get(cache: dict, key: Hashable, build: Callable[[], V]) -> V:
-    """Memoize ``build()`` under ``cache[key]`` with double-checked
-    per-key locking: the fast path is a lock-free hit; on a miss,
-    exactly one thread runs the builder while others for the same key
-    block, and builders for different keys never contend."""
-    try:
-        return cache[key]
-    except KeyError:
-        pass
-    with _LOCKS_GUARD:
-        if isinstance(cache, SessionCache):
-            locks = cache._locks
-        else:
-            locks = cache.setdefault(_LOCK_TABLE_KEY, {})
-        lock = locks.setdefault(key, threading.Lock())
-    with lock:
-        if key not in cache:
-            cache[key] = build()
-    return cache[key]
 
 
 def _big_heap(df) -> bool:
@@ -152,18 +199,6 @@ def session_ckpt(df):
     return df.localCheckpoint(eager=True, storageLevel=level)
 
 
-#: reentrant AQE-off flip state per session: id(session) -> [depth,
-#: original]. Keyed by the SparkSession OBJECT (not applicationId —
-#: conf is per-session, and two sessions sharing one app must not
-#: restore each other's value). Guarded by _LOCKS_GUARD; the BUILD
-#: between flip and restore runs outside the guard, so concurrent
-#: session_cache builds still overlap. NOTE: the flip is session-wide
-#: for its duration — unrelated queries PLANNED inside the window lose
-#: AQE's runtime re-optimization; the window is kept to the checkpoint
-#: construction only, and warm-up chains that plan concurrently accept
-#: it (their frames are checkpoint leaves whose consumers re-plan with
-#: AQE on).
-_AQE_FLIP: dict[int, list] = {}
 _AQE_KEY = "spark.sql.adaptive.enabled"
 
 
@@ -182,33 +217,35 @@ class _aqe_off:
         self.active = False
 
     def __enter__(self):
-        with _LOCKS_GUARD:
+        st = session_state(self.spark)
+        with st.lock:
             try:
                 orig = self.spark.conf.get(_AQE_KEY, "true")
             except Exception:
                 return self  # conf unavailable: degrade, flip nothing
-            st = _AQE_FLIP.setdefault(id(self.spark), [0, orig])
-            st[0] += 1
+            if st.aqe is None:
+                st.aqe = [0, orig]
+            st.aqe[0] += 1
             try:
                 self.spark.conf.set(_AQE_KEY, "false")
                 self.active = True
             except Exception:
-                st[0] -= 1
-                if st[0] == 0:
-                    del _AQE_FLIP[id(self.spark)]
+                st.aqe[0] -= 1
+                if st.aqe[0] == 0:
+                    st.aqe = None
         return self
 
     def __exit__(self, *exc):
         if not self.active:
             return False
-        with _LOCKS_GUARD:
-            st = _AQE_FLIP[id(self.spark)]
-            st[0] -= 1
-            if st[0] == 0:
+        st = session_state(self.spark)
+        with st.lock:
+            st.aqe[0] -= 1
+            if st.aqe[0] == 0:
                 try:
-                    self.spark.conf.set(_AQE_KEY, st[1])
+                    self.spark.conf.set(_AQE_KEY, st.aqe[1])
                 finally:
-                    del _AQE_FLIP[id(self.spark)]
+                    st.aqe = None
         return False
 
 

@@ -255,15 +255,15 @@ def cosine_topk_ivf(
     )
 
 
-def _java_double_key(x: float):
-    """Total-order sort key matching Spark's double ordering
-    (java.lang.Double.compare): -0.0 < 0.0, NaN greater than every
-    other value."""
+def _sql_double_key(x: float):
+    """Sort key matching Spark's SQL double ordering:
+    -0.0 == 0.0 (a tie, left to the caller's tiebreak), NaN greater
+    than every other value."""
     import math
 
     if math.isnan(x):
-        return (1, 0.0, 0.0)
-    return (0, x, math.copysign(1.0, x))
+        return (1, 0.0)
+    return (0, x)
 
 
 def select_probe_cells_local(
@@ -287,9 +287,10 @@ def select_probe_cells_local(
     operation order yields identical BITS for every sim and for qnorm
     (verified against the engine job for both centroid families at
     sf0.001/0.01/0.1 — cells and qnorm repr-identical). Ordering
-    replicates Spark's sim DESC, cid ASC including the -0.0/NaN
-    corners via ``_java_double_key``. At 64K+ centroids rank on the
-    cluster instead (``select_probe_cells``) — same contract."""
+    replicates Spark's sim DESC, cid ASC including the -0.0 == 0.0
+    tie and the NaN corner via ``_sql_double_key``. At 64K+ centroids
+    rank on the cluster instead (``select_probe_cells``) — same
+    contract."""
     import math
 
     q = [float(x) for x in qvec]
@@ -306,7 +307,7 @@ def select_probe_cells_local(
             nc = nc + a * a
         scored.append((cid, dot / (math.sqrt(nc) * qn)))
     scored.sort(key=lambda t: t[0])  # cid ASC tiebreak (stable sorts)
-    scored.sort(key=lambda t: _java_double_key(t[1]), reverse=True)
+    scored.sort(key=lambda t: _sql_double_key(t[1]), reverse=True)
     return [cid for cid, _ in scored[:nprobe]], qn
 
 

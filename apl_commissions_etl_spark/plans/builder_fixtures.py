@@ -53,7 +53,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..caching import SessionCache, locked_get, session_cache
+from ..caching import session_cache, session_state
 from ..sources.testdata import (
     load_table,
     register_base_tables,
@@ -191,23 +191,18 @@ def register_builder_views(spark: SparkSession, sf_dir: str) -> None:
 #: "derived-view tax").  At 100 TB this IS the reference's staged
 #: input_certificate_info table (proposal-builder.ts:2047-2164 loads
 #: it from staging, not from the raw source, for the same reason).
-_CERT_INFO_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
-
-
 def cert_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``input_certificate_info`` fact as a session-scoped
-    checkpoint hash-partitioned on CertificateId (see
-    ``_CERT_INFO_CACHE``).  r12: ``session_cache`` instead of a plain
+    checkpoint hash-partitioned on CertificateId (see the note
+    above).  r12: ``session_cache`` instead of a plain
     localCheckpoint — the checkpoint is built so its LogicalRDD
     REPORTS the partitioning to the planner (an AQE-built checkpoint
     surfaces UnknownPartitioning), so consumers that aggregate or
     window per certificate (dim_policies' min-seq window + rollup,
     the policy dims) run with no Exchange."""
     register_builder_views(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return locked_get(
-        _CERT_INFO_CACHE,
-        key,
+    return session_state(spark).memo(
+        (cert_info, sf_dir),
         lambda: session_cache(
             spark.table("input_certificate_info"),
             key_cols=("CertificateId",),

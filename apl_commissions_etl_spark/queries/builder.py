@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caching import SessionCache, locked_get, session_cache, session_ckpt
+from ..caching import session_cache, session_memo, session_state
 from ..operators.consolidate import consolidate_proposals
 from ..plans import builder
 from ..plans.builder_fixtures import (
@@ -97,13 +97,6 @@ def _certs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cert_info(spark, sf_dir)
 
 
-#: session-scoped caches — the reference materializes builder inputs
-#: once per run; re-deriving the whole-fact hash aggregations per query
-#: dominates steady-state latency otherwise
-_CRITERIA_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
-_PER_SPLIT_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
-
-
 def _certs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The certs fact, spread across the session's parallelism.
 
@@ -135,11 +128,14 @@ def _certs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("input_certificate_info")
 
 
+# session-scoped (per_split, criteria) — the reference materializes
+# builder inputs once per run; re-deriving the whole-fact hash
+# aggregations per query dominates steady-state latency otherwise
+@session_memo
 def _per_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached ``split_hierarchies`` frame (one row per
     certificate split with canonical tier string + hierarchy hash) —
     the single most expensive shared subplan across builder queries."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     # session_cache keyed on GroupId (r12): the per-split frame's
     # consumers aggregate and window by GroupId(+CertificateId), so a
     # GroupId-partitioned checkpoint (whose LogicalRDD REPORTS that
@@ -147,40 +143,32 @@ def _per_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange-free; the r11 plain localCheckpoint surfaced
     # UnknownPartitioning under AQE and every consumer re-shuffled it
     # (guide §2.4)
-    return locked_get(
-        _PER_SPLIT_CACHE,
-        key,
-        lambda: session_cache(
-            builder.split_hierarchies(_certs_raw(spark, sf_dir)),
-            key_cols=("GroupId",),
-        ),
+    return session_cache(
+        builder.split_hierarchies(_certs_raw(spark, sf_dir)),
+        key_cols=("GroupId",),
     )
 
 
+@session_memo
 def _criteria(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> DataFrame:
-        # reuse the per-split checkpoint when some earlier query
-        # already built it; otherwise FUSE expansion + both
-        # aggregations into one job rather than forcing the per-split
-        # materialization first — the fused build is what the warm-up's
-        # critical path runs (per-split warms concurrently on the
-        # slack chain), and both forms produce identical values
-        ps = _PER_SPLIT_CACHE.get(key)
-        # session_cache keyed on GroupId (r12): build_proposals groups
-        # by (GroupId, ConfigHash[, CertificateId]) and the overlap /
-        # mode cascades window by GroupId — all satisfied by a
-        # GroupId-partitioned checkpoint, so the whole builder family
-        # runs its criteria-scale aggregations with no Exchange
-        return session_cache(
-            builder.selection_criteria(
-                _certs_raw(spark, sf_dir), per_split=ps
-            ),
-            key_cols=("GroupId",),
-        )
-
-    return locked_get(_CRITERIA_CACHE, key, build)
+    # reuse the per-split checkpoint when some earlier query
+    # already built it; otherwise FUSE expansion + both
+    # aggregations into one job rather than forcing the per-split
+    # materialization first — the fused build is what the warm-up's
+    # critical path runs (per-split warms concurrently on the
+    # slack chain), and both forms produce identical values
+    ps = session_state(spark).peek((_per_split, sf_dir))
+    # session_cache keyed on GroupId (r12): build_proposals groups
+    # by (GroupId, ConfigHash[, CertificateId]) and the overlap /
+    # mode cascades window by GroupId — all satisfied by a
+    # GroupId-partitioned checkpoint, so the whole builder family
+    # runs its criteria-scale aggregations with no Exchange
+    return session_cache(
+        builder.selection_criteria(
+            _certs_raw(spark, sf_dir), per_split=ps
+        ),
+        key_cols=("GroupId",),
+    )
 
 
 @query(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import SessionCache, locked_get, session_cache
+from ..caching import session_cache, session_memo
 from ..plans import builder_modes as modes
 from ..registry import query
 from .builder import BUILDER_CTES, _certs, _criteria, _per_split, builder_cte_sql
@@ -144,22 +144,13 @@ def _mode_proposal_sql(keys_cte: str, mode: str, notes: str) -> str:
 #: keys, mode keys) are group-scale aggregates that every mode query
 #: re-derives through the same 06b->06e chain — cache them once per
 #: (session, sf) exactly like the criteria cache they build on
-_CASCADE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = SessionCache()
-
-
+@session_memo
 def _cascade(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
     # session_cache (r12): the cached stages report their output
     # partitioning to the planner (a localCheckpoint surfaced
     # UnknownPartitioning under AQE), so mode queries keyed the same
     # way skip their Exchange — see mode_cascade
-    return locked_get(
-        _CASCADE_CACHE,
-        key,
-        lambda: modes.mode_cascade(
-            _criteria(spark, sf_dir), persist=session_cache
-        ),
-    )
+    return modes.mode_cascade(_criteria(spark, sf_dir), persist=session_cache)
 
 
 @query(

@@ -12,10 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import (
-    SessionCache,
-    locked_get,
     session_cache,
     session_ckpt,
+    session_memo,
     track_persisted,
 )
 from ..plans import calc
@@ -143,73 +142,59 @@ def _oracle(final_select: str) -> str:
 #: tables once per run (TRUNCATE + INSERT...SELECT); the Spark
 #: equivalent is caching the small derived dims so each of the 8+
 #: broadcast sides doesn't re-derive its view chain per query.
-_STAGING_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = SessionCache()
-
-
+@session_memo
 def _staging(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> dict[str, DataFrame]:
-        register_fixture_views(spark, sf_dir)
-        out: dict[str, DataFrame] = {}
-        for name, _ in FIXTURE_VIEWS:
-            df = spark.table(name)
-            if name != "stg_premium_transactions":
-                # dims are group/broker-scale (≪ fact): cache them;
-                # the premium fact stays a streaming parquet scan
-                # (tracked so caching.reattach restores the entry
-                # after a test's clearCache)
-                df = track_persisted(df.cache())
-            out[name] = df
-        return out
-
-    return locked_get(_STAGING_CACHE, key, build)
+    register_fixture_views(spark, sf_dir)
+    out: dict[str, DataFrame] = {}
+    for name, _ in FIXTURE_VIEWS:
+        df = spark.table(name)
+        if name != "stg_premium_transactions":
+            # dims are group/broker-scale (≪ fact): cache them;
+            # the premium fact stays a streaming parquet scan
+            # (tracked so caching.reattach restores the entry
+            # after a test's clearCache)
+            df = track_persisted(df.cache())
+        out[name] = df
+    return out
 
 
 #: session-scoped cascade cache — run_calc's shared frames (c3, c8)
 #: are cached once per (session, sf) so the dozen registered calc
 #: queries don't each re-execute the 8-stage cascade (same pattern as
 #: the builder criteria cache; the reference materializes each stage)
-_STAGES_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = SessionCache()
-
-
+@session_memo
 def _stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> dict[str, DataFrame]:
-        # Repartition the FACT (4 narrow columns) before the cascade,
-        # not the wide c3/c8 after it: the cascade is
-        # broadcast-join-narrow, so a small fact file yields ONE
-        # partition end-to-end and every downstream aggregation's
-        # partial phase runs single-threaded. Shuffling the fact costs
-        # a fraction of shuffling the joined frames (measured 9.5s →
-        # 4.5s per persist at sf0.1) and the spread survives the whole
-        # broadcast cascade, so persist needs no repartition of its
-        # own. On a real cluster the fact arrives in thousands of
-        # splits and this spread is what the scan would have provided.
-        #
-        # r12: hash-partition on PremiumTransactionId (unique per fact
-        # row, so the spread is exactly as uniform as round-robin, and
-        # the round-robin path's sort-before-repartition is skipped)
-        # and checkpoint c3/c8 through session_cache: the checkpoint
-        # is built so its LogicalRDD REPORTS
-        # hashpartitioning(PremiumTransactionId) to the planner
-        # (propagated from the fact through the broadcast cascade), so
-        # every downstream per-premium aggregation or window (trace,
-        # trace_full's three branches, the GL/trace rollups) runs with
-        # NO Exchange at all — the r11 AQE-built checkpoint surfaced
-        # UnknownPartitioning and re-shuffled the wide cascade per
-        # query (guide §2.4).
-        par = spark.sparkContext.defaultParallelism
-        stg = dict(_staging(spark, sf_dir))
-        stg["stg_premium_transactions"] = (
-            stg["stg_premium_transactions"].repartition(
-                par, "PremiumTransactionId"
-            )
+    # Repartition the FACT (4 narrow columns) before the cascade,
+    # not the wide c3/c8 after it: the cascade is
+    # broadcast-join-narrow, so a small fact file yields ONE
+    # partition end-to-end and every downstream aggregation's
+    # partial phase runs single-threaded. Shuffling the fact costs
+    # a fraction of shuffling the joined frames (measured 9.5s →
+    # 4.5s per persist at sf0.1) and the spread survives the whole
+    # broadcast cascade, so persist needs no repartition of its
+    # own. On a real cluster the fact arrives in thousands of
+    # splits and this spread is what the scan would have provided.
+    #
+    # r12: hash-partition on PremiumTransactionId (unique per fact
+    # row, so the spread is exactly as uniform as round-robin, and
+    # the round-robin path's sort-before-repartition is skipped)
+    # and checkpoint c3/c8 through session_cache: the checkpoint
+    # is built so its LogicalRDD REPORTS
+    # hashpartitioning(PremiumTransactionId) to the planner
+    # (propagated from the fact through the broadcast cascade), so
+    # every downstream per-premium aggregation or window (trace,
+    # trace_full's three branches, the GL/trace rollups) runs with
+    # NO Exchange at all — the r11 AQE-built checkpoint surfaced
+    # UnknownPartitioning and re-shuffled the wide cascade per
+    # query (guide §2.4).
+    par = spark.sparkContext.defaultParallelism
+    stg = dict(_staging(spark, sf_dir))
+    stg["stg_premium_transactions"] = (
+        stg["stg_premium_transactions"].repartition(
+            par, "PremiumTransactionId"
         )
-        return calc.run_calc(stg, persist=session_cache)
-
-    return locked_get(_STAGES_CACHE, key, build)
+    )
+    return calc.run_calc(stg, persist=session_cache)
 
 
 @query(
@@ -698,24 +683,15 @@ def _gl_of(spark: SparkSession, sf_dir: str, fact: DataFrame) -> DataFrame:
 #: un-truncated delta cascade plan per sub was a measurable share of
 #: the 1g gate session's heap). The streamed parities do NOT use this
 #: cache: their increments are per-micro-batch by construction.
-_DELTA_STAGES_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = (
-    SessionCache()
-)
-
-
+@session_memo
 def _delta_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> dict[str, DataFrame]:
-        batch, _ = _gl_incremental_frames(spark, sf_dir)
-        staging = dict(_staging(spark, sf_dir))
-        par = spark.sparkContext.defaultParallelism
-        staging["stg_premium_transactions"] = batch.repartition(
-            par, "PremiumTransactionId"
-        )
-        return calc.run_calc(staging, persist=session_cache)
-
-    return locked_get(_DELTA_STAGES_CACHE, key, build)
+    batch, _ = _gl_incremental_frames(spark, sf_dir)
+    staging = dict(_staging(spark, sf_dir))
+    par = spark.sparkContext.defaultParallelism
+    staging["stg_premium_transactions"] = batch.repartition(
+        par, "PremiumTransactionId"
+    )
+    return calc.run_calc(staging, persist=session_cache)
 
 
 def _gl_full_rebuild_oracle() -> str:

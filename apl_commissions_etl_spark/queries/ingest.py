@@ -20,7 +20,7 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import SessionCache, locked_get
+from ..caching import session_memo
 from ..registry import query
 from ..sources.csv_ingest import read_raw_csv
 from ..sources.archive import read_zip_csvs
@@ -34,9 +34,6 @@ _DIRTY_HEADERS = [
     "c mktsegment",
 ]
 
-_CSV_STAGE: dict[tuple[str, str], str] = SessionCache()
-_ZIP_STAGE: dict[tuple[str, str], str] = SessionCache()
-
 
 def _stage_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -46,52 +43,44 @@ def _stage_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     )
 
 
+@session_memo
 def _csv_stage(spark: SparkSession, sf_dir: str) -> str:
     """Write customer as 2 headered CSV part files (glob source S7)
     with dirty headers; once per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        path = _stage_dir(spark, sf_dir, "csv")
-        c = load_table(spark, sf_dir, "customer").select(
-            F.col("c_custkey").cast("string"),
-            "c_name",
-            F.col("c_nationkey").cast("string"),
-            F.col("c_acctbal").cast("string"),
-            "c_mktsegment",
-            F.col("c_mktsegment").alias("c_mktsegment2"),
-        )
-        c.toDF(*_DIRTY_HEADERS).coalesce(2).write.mode("overwrite").option(
-            "header", True
-        ).csv(path)
-        return path
-
-    return locked_get(_CSV_STAGE, key, build)
+    path = _stage_dir(spark, sf_dir, "csv")
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").cast("string"),
+        "c_name",
+        F.col("c_nationkey").cast("string"),
+        F.col("c_acctbal").cast("string"),
+        "c_mktsegment",
+        F.col("c_mktsegment").alias("c_mktsegment2"),
+    )
+    c.toDF(*_DIRTY_HEADERS).coalesce(2).write.mode("overwrite").option(
+        "header", True
+    ).csv(path)
+    return path
 
 
+@session_memo
 def _zip_stage(spark: SparkSession, sf_dir: str) -> str:
     """Zip the staged CSV parts as 'CommissionsDetail_<i>.csv' plus a
     DECOY member ('Other_0.csv', duplicate rows) that the prefix
     filter must exclude — if filtering regressed, the row multiset
     changes and the value hash catches it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        csv_dir = _csv_stage(spark, sf_dir)
-        zpath = _stage_dir(spark, sf_dir, "zip") + ".zip"
-        parts = sorted(
-            f for f in os.listdir(csv_dir)
-            if f.endswith(".csv") and not f.startswith(".")
-        )
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for i, p in enumerate(parts):
-                zf.write(
-                    os.path.join(csv_dir, p), f"CommissionsDetail_{i}.csv"
-                )
-            zf.write(os.path.join(csv_dir, parts[0]), "Other_0.csv")
-        return zpath
-
-    return locked_get(_ZIP_STAGE, key, build)
+    csv_dir = _csv_stage(spark, sf_dir)
+    zpath = _stage_dir(spark, sf_dir, "zip") + ".zip"
+    parts = sorted(
+        f for f in os.listdir(csv_dir)
+        if f.endswith(".csv") and not f.startswith(".")
+    )
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for i, p in enumerate(parts):
+            zf.write(
+                os.path.join(csv_dir, p), f"CommissionsDetail_{i}.csv"
+            )
+        zf.write(os.path.join(csv_dir, parts[0]), "Other_0.csv")
+    return zpath
 
 
 def _typed(raw: DataFrame) -> DataFrame:
@@ -160,9 +149,7 @@ def ingest_zip_prefix_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAT_STAGE: dict[tuple[str, str], str] = SessionCache()
-
-
+@session_memo
 def _materialize_stage(spark: SparkSession, sf_dir: str) -> str:
     """S3/S8/S11 sink exercise, once per (session, sf): an
     INSERT..SELECT materializer writes a filtered orders projection to
@@ -171,9 +158,6 @@ def _materialize_stage(spark: SparkSession, sf_dir: str) -> str:
     truncate-and-reload (S11, sql/transforms/00-references.sql:5-20)
     overwrites a first write with the corrected second load -- the
     read-back must see ONLY the reload."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MAT_STAGE:
-        return _MAT_STAGE[key]
     root = _stage_dir(spark, sf_dir, "materialize")
 
     # S8: INSERT...SELECT -> parquet stage via the Pipeline materializer
@@ -215,8 +199,6 @@ def _materialize_stage(spark: SparkSession, sf_dir: str) -> str:
         reload_path
     )
     reg.write.mode("overwrite").parquet(reload_path)
-
-    _MAT_STAGE[key] = root
     return root
 
 
@@ -283,12 +265,6 @@ def pipeline_materialize_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text-log parse path (§2.1 sources beyond CSV/ZIP/parquet)
 # ---------------------------------------------------------------------------
 
-_JSONL_STAGE: dict[tuple[str, str], str] = SessionCache()
-_ORC_STAGE: dict[tuple[str, str], str] = SessionCache()
-_PART_STAGE: dict[tuple[str, str], str] = SessionCache()
-_LOG_STAGE: dict[tuple[str, str], str] = SessionCache()
-
-
 def _events_for_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -299,17 +275,13 @@ def _events_for_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _jsonl_stage(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        path = _stage_dir(spark, sf_dir, "jsonl")
-        _events_for_stage(spark, sf_dir).coalesce(2).write.mode(
-            "overwrite"
-        ).json(path)
-        return path
-
-    return locked_get(_JSONL_STAGE, key, build)
+    path = _stage_dir(spark, sf_dir, "jsonl")
+    _events_for_stage(spark, sf_dir).coalesce(2).write.mode(
+        "overwrite"
+    ).json(path)
+    return path
 
 
 @query(
@@ -340,21 +312,17 @@ def ingest_jsonl_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _orc_stage(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        path = _stage_dir(spark, sf_dir, "orc")
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
-            F.col("o_orderdate").cast("date").alias("o_orderdate"),
-        ).coalesce(2).write.mode("overwrite").orc(path)
-        return path
-
-    return locked_get(_ORC_STAGE, key, build)
+    path = _stage_dir(spark, sf_dir, "orc")
+    load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
+        F.col("o_orderdate").cast("date").alias("o_orderdate"),
+    ).coalesce(2).write.mode("overwrite").orc(path)
+    return path
 
 
 @query(
@@ -384,25 +352,21 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Orders written hive-partitioned by order year (once per
     session) — the layout every date-ranged query at 100 TB depends
     on: the year filter becomes a PartitionFilter and non-matching
     directories are never opened."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        path = _stage_dir(spark, sf_dir, "part")
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
-            F.col("o_orderdate").cast("date").alias("o_orderdate"),
-            F.year(F.col("o_orderdate")).alias("o_year"),
-        ).write.mode("overwrite").partitionBy("o_year").parquet(path)
-        return path
-
-    return locked_get(_PART_STAGE, key, build)
+    path = _stage_dir(spark, sf_dir, "part")
+    load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
+        F.col("o_orderdate").cast("date").alias("o_orderdate"),
+        F.year(F.col("o_orderdate")).alias("o_year"),
+    ).write.mode("overwrite").partitionBy("o_year").parquet(path)
+    return path
 
 
 @query(
@@ -440,27 +404,23 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _log_stage(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        path = _stage_dir(spark, sf_dir, "log")
-        _events_for_stage(spark, sf_dir).select(
-            F.concat(
-                F.col("ts_us").cast("string"),
-                F.lit(" ["),
-                F.upper("event_type"),
-                F.lit("] user="),
-                F.col("user_id").cast("string"),
-                F.lit(" event="),
-                F.col("event_id").cast("string"),
-                F.lit(" cents="),
-                F.col("value_cents").cast("string"),
-            ).alias("value")
-        ).coalesce(2).write.mode("overwrite").text(path)
-        return path
-
-    return locked_get(_LOG_STAGE, key, build)
+    path = _stage_dir(spark, sf_dir, "log")
+    _events_for_stage(spark, sf_dir).select(
+        F.concat(
+            F.col("ts_us").cast("string"),
+            F.lit(" ["),
+            F.upper("event_type"),
+            F.lit("] user="),
+            F.col("user_id").cast("string"),
+            F.lit(" event="),
+            F.col("event_id").cast("string"),
+            F.lit(" cents="),
+            F.col("value_cents").cast("string"),
+        ).alias("value")
+    ).coalesce(2).write.mode("overwrite").text(path)
+    return path
 
 
 @query(

@@ -83,20 +83,21 @@ def warm_shared_caches(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     criteria → mode keys, LSH pairs → cluster labels, ANN constants)
     run as CONCURRENT chains: Spark's scheduler interleaves their
     jobs, so wall time is the longest chain, not the sum — exactly
-    what a multi-tenant service does at startup. Each chain registers
-    the temp-view families it needs through
-    ``sources.testdata.registered_once``, which blocks racing chains
-    until the claimer's CREATE VIEWs have completed — so no chain can
-    observe missing views or re-register (and silently uncache) a
-    family another chain already built on.  Every
-    session cache the chains populate goes through
-    ``caching.locked_get`` — per-key double-checked locking — so even
-    a future accessor shared across chains, or a user query racing
-    warm-up from another thread, cannot double-build or leak an eager
-    localCheckpoint; the chains' disjointness is an optimization, not
-    a correctness requirement. Per-step numbers are each chain's own
-    busy time; concurrent steps overlap, so their sum exceeds the
-    wall clock.
+    what a multi-tenant service does at startup. Everything the chains
+    fill lives in the session's one ``caching.SessionState``. Each
+    chain registers the temp-view families it needs through
+    ``sources.testdata.registered_once``, which holds that family's
+    lock from the state until the CREATE VIEWs have completed — so no
+    chain can observe missing views or re-register (and silently
+    uncache) a family another chain already built on.  Every shared
+    frame the chains populate comes from a ``caching.session_memo``
+    accessor — per-key double-checked locking on the same state — so
+    even a future accessor shared across chains, or a user query
+    racing warm-up from another thread, cannot double-build or leak an
+    eager localCheckpoint; the chains' disjointness is an
+    optimization, not a correctness requirement. Per-step numbers are
+    each chain's own busy time; concurrent steps overlap, so their sum
+    exceeds the wall clock.
     """
     import time
     from concurrent.futures import ThreadPoolExecutor
@@ -138,7 +139,8 @@ def warm_shared_caches(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     def chain_builder():
         step("builder_views", lambda: register_builder_views(spark, sf_dir))
         # cert_info is prefetched by chain_ann (it has the most slack);
-        # locked_get makes this a blocking share, never a double build
+        # the session memo makes this a blocking share, never a double
+        # build
         step("builder_criteria", lambda: builder._criteria(spark, sf_dir))
         step("mode_cascade_keys",
              lambda: builder_modes._cascade(spark, sf_dir))

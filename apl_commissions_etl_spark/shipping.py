@@ -5,7 +5,7 @@ applyInPandas) pickles closures that reference this package's modules
 by name. The driver harness imports ``__spark_entry__`` by file path
 from an arbitrary cwd, so executor workers have no guarantee the
 package is importable. ``ensure_package_on_executors`` zips the
-package once per SparkContext and registers it with ``addPyFile``.
+package once per session and registers it with ``addPyFile``.
 
 On a real cluster this is exactly how the engine deploys: one --py-files
 zip; no reliance on a shared filesystem or cwd.
@@ -19,14 +19,12 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_shipped: set[str] = set()
+from .caching import session_memo
 
 
+@session_memo
 def ensure_package_on_executors(spark: SparkSession) -> None:
     sc = spark.sparkContext
-    app_id = sc.applicationId
-    if app_id in _shipped:
-        return
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_root)
     zpath = os.path.join(
@@ -39,4 +37,3 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, parent))
     sc.addPyFile(zpath)
-    _shipped.add(app_id)

@@ -9,9 +9,10 @@ inputs; the domain pipeline has its own fixture builders in
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..caching import session_memo, session_state
 
 TABLES = (
     "region",
@@ -53,15 +54,15 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     try:
-        n = _SPLIT_COUNTS.get(id(df))
+        attrs = vars(df)
+        n = attrs.get(_SCAN_SPLITS)
         if n is None:
             # one full physical-planning pass (~0.06 s of driver work);
-            # memoised for the session-cached table handles, whose ids
-            # stay live for the cache's lifetime
+            # remembered on the session's table handles (load_table),
+            # which live as long as the session
             n = df.rdd.getNumPartitions()
-            with _TABLE_FRAMES_LOCK:
-                if any(f is df for f in _TABLE_FRAMES.values()):
-                    _SPLIT_COUNTS[id(df)] = n
+            if _SCAN_SPLITS in attrs:
+                attrs[_SCAN_SPLITS] = n
         if n * 2 >= par:
             return df
     except Exception:
@@ -69,25 +70,23 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(par, *key_cols) if key_cols else df.repartition(par)
 
 
-#: (applicationId, sf_dir, table) -> lazy DataFrame HANDLE.  NOT a data
-#: cache: nothing is materialized — building the same scan frame per
-#: call costs ~0.12 s of driver work (relation resolution + schema) and
-#: every query pays it at build time (r13 profile, guide §5 "the
-#: driver should do almost no data work").  Reusing the immutable
-#: handle removes that per-call tax; the scan itself still executes in
-#: full inside every consuming query.
-_TABLE_FRAMES: dict = {}
-_TABLE_FRAMES_LOCK = threading.Lock()
-
-#: id(frame) -> scan split count, for frames held in _TABLE_FRAMES
-#: (their lifetime matches the cache, so ids stay valid).  spread()'s
-#: split probe (df.rdd.getNumPartitions()) costs a full physical
-#: planning pass (~0.06 s) per call otherwise.
-_SPLIT_COUNTS: dict[int, int] = {}
+#: attribute slot on a table handle holding its scan split count (None
+#: until spread() first probes it): spread()'s split probe
+#: (df.rdd.getNumPartitions()) costs a full physical planning pass
+#: (~0.06 s) per call otherwise.
+_SCAN_SPLITS = "_scan_splits"
 
 
+@session_memo
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table (one lazy frame handle per session).
+
+    The handle is NOT a data cache: nothing is materialized — building
+    the same scan frame per call costs ~0.12 s of driver work (relation
+    resolution + schema) and every query pays it at build time (r13
+    profile, guide §5 "the driver should do almost no data work").
+    Reusing the immutable handle removes that per-call tax; the scan
+    itself still executes in full inside every consuming query.
 
     ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which
     Spark's vectorized reader rejects. We read it with
@@ -95,19 +94,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and convert to a microsecond TimestampType column, truncating like
     DuckDB/Arrow do, so both engines see identical values.
     """
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-    except Exception:
-        key = None  # connect mode: no cheap session identity; rebuild
-    if key is not None:
-        with _TABLE_FRAMES_LOCK:
-            hit = _TABLE_FRAMES.get(key)
-        if hit is not None:
-            return hit
     df = _read_table(spark, sf_dir, name)
-    if key is not None:
-        with _TABLE_FRAMES_LOCK:
-            df = _TABLE_FRAMES.setdefault(key, df)
+    setattr(df, _SCAN_SPLITS, None)
     return df
 
 
@@ -129,104 +117,35 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-#: (applicationId, view-family) -> sf_dir already registered.  Replacing
-#: a temp view (CREATE OR REPLACE / createOrReplaceTempView) makes Spark
-#: uncache every cached plan that depends on it — so re-registering the
-#: same fixture views before every query silently dropped the
-#: session-scoped criteria/cascade caches and re-ran whole cascades
-#: (measured: builder_mode_key_mappings 24s in a 120-query session vs
-#: 2s isolated).  Views are static per (session, sf_dir): register once.
-_VIEW_REGISTRY: dict[tuple[str, str], str] = {}
-_VIEW_REGISTRY_LOCK = threading.Lock()
-
-
-def needs_registration(spark: SparkSession, family: str, sf_dir: str) -> bool:
-    """True exactly once per (session, family, sf_dir); switching sf_dir
-    re-registers (and correctly invalidates stale caches).  The
-    get+set is atomic so concurrent warm-up chains can't both claim
-    the registration slot.
-
-    NOTE claim-then-register is NOT safe under concurrency on its own:
-    a second chain told "already registered" could race ahead of the
-    claimer's in-flight CREATE VIEW.  Concurrent callers (the warm-up
-    chains) must go through ``registered_once``, which blocks waiters
-    until the claimer's registration body has COMPLETED."""
-    key = (spark.sparkContext.applicationId, family)
-    with _VIEW_REGISTRY_LOCK:
-        if _VIEW_REGISTRY.get(key) == sf_dir:
-            return False
-        _VIEW_REGISTRY[key] = sf_dir
-        return True
-
-
-#: (applicationId, family) -> (sf_dir, Event): the Event is set once
-#: that family's registration body for THAT sf_dir has finished (not
-#: merely been claimed). Keyed per family — not per (family, sf_dir) —
-#: so flipping a multi-SF session back to an earlier sf re-registers
-#: (the views point at the LATEST sf; a stale completed event must not
-#: short-circuit the re-registration).
-_REGISTERED_EVENTS: dict[tuple[str, str], tuple[str, threading.Event]] = {}
-
-
 def registered_once(
     spark: SparkSession, family: str, sf_dir: str, register
 ) -> None:
     """Run ``register()`` exactly once per (session, family, sf_dir),
-    BLOCKING concurrent callers until it has completed — the safe form
-    of the needs_registration claim for warm-up chains that register
-    their own view families concurrently instead of serially up front.
-    A failed registration releases the claim so a later call retries;
-    a call with a NEW sf_dir re-registers (same invalidation contract
-    as ``needs_registration``)."""
-    key = (spark.sparkContext.applicationId, family)
-    while True:
-        with _VIEW_REGISTRY_LOCK:
-            entry = _REGISTERED_EVENTS.get(key)
-            if entry is not None and entry[0] != sf_dir:
-                if not entry[1].is_set():
-                    # another sf's registration is IN FLIGHT: wait for
-                    # it below, then contend for our own sf
-                    entry = (entry[0], entry[1])
-                    claimed = False
-                    ev = entry[1]
-                    stale = True
-                else:
-                    entry = None  # completed for another sf: supersede
-                    stale = False
-            else:
-                stale = False
-            if entry is None:
-                claimed = True
-                ev = threading.Event()
-                _REGISTERED_EVENTS[key] = (sf_dir, ev)
-            elif not stale:
-                claimed = False
-                ev = entry[1]
-        if not claimed:
-            ev.wait()
-            if stale:
-                continue  # other-sf registration done; claim ours now
-            with _VIEW_REGISTRY_LOCK:
-                cur = _REGISTERED_EVENTS.get(key)
-                if cur is not None and cur[1] is ev:
-                    return  # claimer succeeded for our sf
-            continue  # claimer failed (or sf moved on); retry
-        try:
-            if needs_registration(spark, family, sf_dir):
-                register()
-        except BaseException:
-            with _VIEW_REGISTRY_LOCK:
-                cur = _REGISTERED_EVENTS.get(key)
-                if cur is not None and cur[1] is ev:
-                    _REGISTERED_EVENTS.pop(key, None)
-                # release the needs_registration claim too
-                _VIEW_REGISTRY.pop(
-                    (spark.sparkContext.applicationId, family), None
-                )
-            ev.set()  # wake waiters; they will retry the claim
-            raise
-        ev.set()
-        return
+    BLOCKING concurrent callers until it has completed — so warm-up
+    chains can register their own view families concurrently instead
+    of serially up front.
+
+    Replacing a temp view (CREATE OR REPLACE / createOrReplaceTempView)
+    makes Spark uncache every cached plan that depends on it — so
+    re-registering the same fixture views before every query silently
+    dropped the session-scoped criteria/cascade caches and re-ran whole
+    cascades (measured: builder_mode_key_mappings 24s in a 120-query
+    session vs 2s isolated).  Views are static per (session, sf_dir):
+    register once.
+
+    The session state records, per family, the sf_dir whose
+    registration has COMPLETED; it is set only after ``register()``
+    returns, under the family's lock, so a waiter never proceeds
+    before the claimer's CREATE VIEWs exist, and a failed registration
+    leaves the record untouched so a later call retries.  The record is
+    per family — not per (family, sf_dir) — so a call with a NEW sf_dir
+    re-registers (the views point at the LATEST sf, and stale caches
+    are correctly invalidated), and flipping back re-registers too."""
+    st = session_state(spark)
+    with st.key_lock((registered_once, family)):
+        if st.views.get(family) != sf_dir:
+            register()
+            st.views[family] = sf_dir
 
 
 def register_base_tables(

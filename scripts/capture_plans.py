@@ -1,7 +1,7 @@
 """Capture .explain("formatted") for every headline query into
-plans/r12/<query>_<tag>.txt (tag = before/after).
+plans/<round>/<query>_<tag>.txt (round = e.g. r14, tag = before/after).
 
-Usage: python scripts/capture_plans_r12.py <tag> [name ...]
+Usage: python scripts/capture_plans.py <round> <tag> [name ...]
 Defaults to every bench.HEADLINE name; explicit names restrict the set.
 Runs at sf0.1 with the same session + warmed shared caches as bench.py
 so the captured plan is the steady-state plan the bench times.
@@ -24,16 +24,19 @@ from apl_commissions_etl_spark.session import (  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r12",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("capture-plans-r12")
+    spark = get_spark(f"capture-plans-{rnd}")
     warm_shared_caches(spark, sf_dir)
     qs = all_queries()
     for name in names:

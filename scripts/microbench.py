@@ -2,7 +2,7 @@
 best-of-N noop-write timing for the given names (bench.py methodology,
 restricted set — for A/B comparison while optimizing).
 
-Usage: python scripts/microbench_r12.py [-nN] name [name ...]
+Usage: python scripts/microbench.py [-nN] name [name ...]
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ def main() -> None:
         args = args[1:]
     names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("microbench-r12")
+    spark = get_spark("microbench")
     spark.range(1).count()
     t0 = time.time()
     warm_shared_caches(spark, sf_dir)

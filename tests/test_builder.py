@@ -157,6 +157,38 @@ def test_hierarchy_hash_is_group_scoped(built):
     assert cross.count() == 0
 
 
+def test_mode_proposal_id_determines_group(built):
+    """mode_prestage_split_configs groups by (GroupId, ProposalId) on
+    the assumption that ProposalId determines GroupId: each mode
+    proposal must carry exactly one GroupId, per mode output and
+    across the mode-tagged union the grouping actually runs over."""
+    from apl_commissions_etl_spark.plans import builder_modes as modes
+
+    _, criteria = built
+    cascade = modes.mode_cascade(criteria)
+
+    def groups_per_proposal(props):
+        return props.groupBy("ProposalId").agg(
+            F.countDistinct("GroupId").alias("n_groups")
+        )
+
+    total = 0
+    for src, mode, notes in modes._MODES:
+        per = groups_per_proposal(
+            modes.mode_proposals(cascade[src], mode, notes)
+        ).collect()
+        assert all(r.n_groups == 1 for r in per), mode
+        total += len(per)
+    assert total > 0, "fixture must route some keys to a mode proposal"
+    union = groups_per_proposal(
+        modes.tagged_keys(cascade).select(
+            "GroupId", modes._pid_col().alias("ProposalId")
+        )
+    ).collect()
+    assert len(union) == total
+    assert all(r.n_groups == 1 for r in union)
+
+
 def test_continuations_inherit_and_truncate(built, spark):
     certs, criteria = built
     props = builder.build_proposals(criteria)

@@ -1,20 +1,31 @@
-"""caching.locked_get: the per-key locked memoization every session
-cache accessor routes through (warm-up chains run concurrently, so
-double-build races must be structurally impossible)."""
+"""caching.SessionState: the one per-session state owner every
+session-scoped accessor routes through (warm-up chains run
+concurrently, so double-build races must be structurally impossible)."""
 
 from __future__ import annotations
 
+import gc
 import threading
 import time
+import weakref
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
 
-from apl_commissions_etl_spark.caching import locked_get
+from apl_commissions_etl_spark.caching import (
+    SessionState,
+    session_memo,
+    session_state,
+)
+
+
+class _FakeSession:
+    """Stands in for a SparkSession: the state only needs an object it
+    can hang itself on."""
 
 
 def test_single_build_under_contention():
-    cache: dict = {}
+    state = SessionState()
     calls = []
     barrier = threading.Barrier(8)
 
@@ -25,7 +36,7 @@ def test_single_build_under_contention():
 
     def hit():
         barrier.wait()
-        return locked_get(cache, ("app", "sf"), build)
+        return state.memo(("app", "sf"), build)
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         results = list(pool.map(lambda _: hit(), range(8)))
@@ -34,7 +45,7 @@ def test_single_build_under_contention():
 
 
 def test_distinct_keys_build_concurrently():
-    cache: dict = {}
+    state = SessionState()
     in_flight = []
     peak = []
     guard = threading.Lock()
@@ -51,7 +62,7 @@ def test_distinct_keys_build_concurrently():
 
     def hit(k):
         barrier.wait()
-        return locked_get(cache, k, lambda: build(k))
+        return state.memo(k, lambda: build(k))
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         results = list(pool.map(hit, range(4)))
@@ -61,12 +72,15 @@ def test_distinct_keys_build_concurrently():
 
 
 def test_hit_path_returns_cached_value():
-    cache = {("k",): 42}
-    assert locked_get(cache, ("k",), lambda: 0) == 42
+    state = SessionState()
+    assert state.memo(("k",), lambda: 42) == 42
+    assert state.memo(("k",), lambda: 0) == 42
+    assert state.peek(("k",)) == 42
+    assert state.peek(("other",)) is None  # peek never builds
 
 
 def test_failed_build_not_cached():
-    cache: dict = {}
+    state = SessionState()
     attempts = []
 
     def failing():
@@ -75,39 +89,82 @@ def test_failed_build_not_cached():
 
     for _ in range(2):
         try:
-            locked_get(cache, "k", failing)
+            state.memo("k", failing)
         except RuntimeError:
             pass
-    assert len(attempts) == 2 and "k" not in cache
+    assert len(attempts) == 2 and state.peek("k") is None
     # a later successful build fills the slot
-    assert locked_get(cache, "k", lambda: "ok") == "ok"
+    assert state.memo("k", lambda: "ok") == "ok"
 
 
-def test_session_cache_data_plane_is_pure():
-    """SessionCache keeps its lock table OFF the data plane (r6
-    ADVICE: the sentinel-key design leaked a non-value entry into any
-    iteration/len/serialization of the cache)."""
-    import json
+def test_sessions_get_separate_states():
+    a, b = _FakeSession(), _FakeSession()
+    assert session_state(a) is session_state(a)
+    assert session_state(a) is not session_state(b)
 
-    from apl_commissions_etl_spark.caching import SessionCache
+    calls = []
 
-    cache = SessionCache()
-    assert locked_get(cache, "a", lambda: 1) == 1
-    assert locked_get(cache, "b", lambda: 2) == 2
-    assert locked_get(cache, "a", lambda: 99) == 1  # hit path
-    # iterate / len / serialize see ONLY real entries
-    assert sorted(cache) == ["a", "b"]
-    assert len(cache) == 2
-    assert dict(cache.items()) == {"a": 1, "b": 2}
-    assert json.loads(json.dumps(cache)) == {"a": 1, "b": 2}
-    cache.clear()
-    assert locked_get(cache, "a", lambda: 7) == 7  # locks survive clear
+    @session_memo
+    def accessor(spark, sf_dir):
+        calls.append((spark, sf_dir))
+        return len(calls)
+
+    assert accessor(a, "/sf") == 1
+    assert accessor(a, "/sf") == 1  # hit
+    assert accessor(b, "/sf") == 2  # other session: its own entry
+    assert accessor(a, "/sf2") == 3  # other args: their own entry
+    assert calls == [(a, "/sf"), (b, "/sf"), (a, "/sf2")]
 
 
-def test_plain_dict_fallback_still_works():
-    cache = {}
-    assert locked_get(cache, "k", lambda: 5) == 5
-    assert locked_get(cache, "k", lambda: 9) == 5
+def test_first_touch_and_memo_race_stress():
+    """16 threads (more than the cores) race the first touch of a fresh
+    session's state and 32 keys with a shortened switch interval: every
+    thread must see one state and every key must build exactly once."""
+    import sys
+
+    spark = _FakeSession()
+    builds: dict = {}
+    guard = threading.Lock()
+    barrier = threading.Barrier(16)
+
+    @session_memo
+    def accessor(spark, k):
+        with guard:
+            builds[k] = builds.get(k, 0) + 1
+        return k * k
+
+    def worker(_):
+        barrier.wait(10)
+        st = session_state(spark)
+        return st, [accessor(spark, k) for k in range(32)]
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futures = [pool.submit(worker, i) for i in range(16)]
+            results = [f.result(timeout=30) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert len({id(st) for st, _ in results}) == 1
+    assert all(vals == [k * k for k in range(32)] for _, vals in results)
+    assert builds == {k: 1 for k in range(32)}
+
+
+def test_dropped_session_state_is_collected():
+    class _Frame:
+        def __init__(self, session):
+            self.session = session
+
+    spark = _FakeSession()
+    # a memoised frame points back at its session (a DataFrame holds
+    # its SparkSession); that cycle must not pin either of them
+    frame = session_state(spark).memo("frame", lambda: _Frame(spark))
+    session_ref, frame_ref = weakref.ref(spark), weakref.ref(frame)
+    del spark, frame
+    gc.collect()
+    assert session_ref() is None
+    assert frame_ref() is None
 
 
 def test_session_ckpt_storage_level_adapts_to_heap():
@@ -205,11 +262,11 @@ def test_session_cache_reports_partitioning_and_survives_clearcache(
 
 
 def test_reattach_restores_evicted_cache_entries(spark):
-    """clearCache() evicts CacheManager entries while the module
-    SessionCaches keep handing out the same DataFrame handles; without
+    """clearCache() evicts CacheManager entries while the session state
+    keeps handing out the same DataFrame handles; without
     re-attachment every consumer replans against full lineage (r12:
     the staging dims are ``.cache()``d through track_persisted).
-    reattach() must restore the entry for every tracked frame."""
+    reattach(spark) must restore the entry for every tracked frame."""
     from pyspark.storagelevel import StorageLevel
 
     from apl_commissions_etl_spark.caching import (
@@ -226,7 +283,7 @@ def test_reattach_restores_evicted_cache_entries(spark):
     spark.catalog.clearCache()
     assert df.storageLevel == StorageLevel.NONE
 
-    n = reattach()
+    n = reattach(spark)
     assert n >= 1
     assert df.storageLevel != StorageLevel.NONE
     plan_restored = (
@@ -234,7 +291,5 @@ def test_reattach_restores_evicted_cache_entries(spark):
     )
     assert "InMemoryTableScan" in plan_restored
     df.unpersist()
-    caching_mod = __import__(
-        "apl_commissions_etl_spark.caching", fromlist=["_TRACKED"]
-    )
-    caching_mod._TRACKED.remove(df)  # keep the scratch frame out of later reattaches
+    # keep the scratch frame out of later reattaches
+    session_state(spark).tracked.remove(df)

@@ -79,12 +79,12 @@ def test_dim_filter_prunes_before_join(spark, sf_dir):
         opt = _optimized(s3)
     finally:
         # clearCache evicted every session-shared frame's CacheManager
-        # entry (criteria, cascade, staging dims) while the module
-        # SessionCaches keep handing out the same handles — without
+        # entry (criteria, cascade, staging dims) while the session
+        # state keeps handing out the same handles — without
         # re-attachment every later test replans full lineage and the
         # cached-partitioning plan contracts (e.g. the mode cascade's
         # single-fact-shuffle bound) break. Restore the entries.
-        caching.reattach()
+        caching.reattach(spark)
     # every dim side of the cascade joins carries the broadcast hint,
     # and the premium>0 filter reached the fact scan subtree
     assert opt.count("strategy=broadcast") >= 3

@@ -72,8 +72,10 @@ def test_probe_selection_local_matches_engine_job(spark, sf_dir):
 
 
 def test_probe_selection_local_orders_like_spark_doubles():
-    """-0.0/0.0 and NaN sims must order exactly as Spark sorts doubles
-    (NaN largest, -0.0 < 0.0), with cid as the ascending tiebreak."""
+    """Tied and NaN sims must order exactly as Spark sorts doubles
+    (NaN largest), with cid as the ascending tiebreak. The signed-zero
+    corner is pinned against the engine in
+    test_probe_selection_signed_zero_ties_like_engine."""
     # centroids crafted so sims are: cid 1 -> NaN, cid 2/3 -> 0.0 tie,
     # cid 4 -> negative
     q = [1.0, 0.0]
@@ -86,6 +88,31 @@ def test_probe_selection_local_orders_like_spark_doubles():
     cells, qn = similarity.select_probe_cells_local(q, cents, 4)
     assert cells == [1, 2, 3, 4]
     assert qn == 1.0
+
+
+def test_probe_selection_signed_zero_ties_like_engine(spark):
+    """Spark's sort treats -0.0 == 0.0, so a -0.0 sim and a 0.0 sim
+    tie and cid ASC decides. The -0.0 comes from a tiny negative dot
+    product that underflows when divided by a large norm product."""
+    import math
+
+    q = [1.0, 0.0]
+    cents = [
+        (2, [-5e-324, 1e10]),  # dot -5e-324, / 1e10 -> sim -0.0
+        (3, [0.0, 1.0]),       # dot 0.0 -> sim +0.0
+        (1, [-1.0, 0.0]),      # sim -1.0
+    ]
+    qcol = F.expr(similarity._vec_sql(q))
+    eng_cells, eng_qn = similarity.select_probe_cells(spark, qcol, cents, 3)
+    loc_cells, loc_qn = similarity.select_probe_cells_local(q, cents, 3)
+    # the crafted centroid really scores -0.0 (same op order as both
+    # probe paths: left-to-right dot, then one divide)
+    dot = 0.0 + -5e-324 * 1.0 + 1e10 * 0.0
+    sim = dot / (math.sqrt(0.0 + (-5e-324) ** 2 + 1e10 * 1e10) * 1.0)
+    assert sim == 0.0 and math.copysign(1.0, sim) == -1.0
+    assert eng_cells == [2, 3, 1]
+    assert loc_cells == eng_cells
+    assert repr(loc_qn) == repr(eng_qn)
 
 
 def test_ivf_prebuilt_index_matches_inline_assignment(spark, sf_dir):
